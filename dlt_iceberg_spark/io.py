@@ -34,19 +34,6 @@ from pyspark.sql import functions as F
 #: build.  Weak keys let stopped sessions drop their entries.
 _PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 # Columns normalized to µs TimestampNTZ on load, whatever their physical type.
 _TS_COLS = {"events": ("ts",)}
 
@@ -105,7 +92,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(c, F.col(c).cast("timestamp_ntz"))
     per_session[key] = df
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}

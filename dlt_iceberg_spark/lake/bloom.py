@@ -23,6 +23,11 @@ no column name can collide with the routing.  Manifest refs carry the
 bit-OR fold of their entries' blooms (same m/k/t), letting a probe skip
 a whole 500-file manifest chunk without opening it.
 
+Planning: this module only builds and tests filters.  The skip decision
+is owned by lake/pruning.py (``Predicate.may_match``), which tests the
+``bloom:<col>`` entry of a data file and of a manifest ref alike, for
+``=``/``==``/``in`` probes only.
+
 Hashing: one JVM ``xxhash64(col)`` per value, split Guava-style into
 two 32-bit halves h1/h2; bit i = (h1 + i*h2) mod m (Kirsch-
 Mitzelmauer double hashing).  The probe side replays the identical
@@ -185,15 +190,3 @@ def fold_blooms(blooms: list[dict]) -> dict | None:
         "k": k,
         "t": t,
     }
-
-
-def sketch_keeps_file(sketches: dict | None, col: str, op: str, val: Any) -> bool:
-    """The planning hook: False only when a stored bloom proves the probe
-    cannot match.  Used identically for manifest refs (fold-OR blooms)
-    and data-file entries."""
-    if not sketches or op not in ("=", "==", "in"):
-        return True
-    bl = sketches.get(bloom_key(col))
-    if not is_bloom(bl):
-        return True
-    return bloom_may_contain(bl, op, val)

@@ -127,40 +127,15 @@ class ManifestRef:
     # ``None`` range bound = some entry lacked stats → range is unbounded on
     # that column (must-read on any probe of it).
     ranges: dict[str, list[Any]] = dc_field(default_factory=dict)
+    # partition field -> every entry's distinct value; absent when some
+    # entry lacks the field or past the summary cap (lake/pruning.py reads
+    # both as "could contain anything")
     partitions: dict[str, list[Any]] = dc_field(default_factory=dict)
     # column -> merged KMV sketch over every entry (same shape as
     # DataFile.sketches).  Present ONLY when every entry carries the
     # column's sketch with one hash frame — snapshot-level NDV then
     # answers from O(refs) metadata without opening a manifest.
     sketches: dict[str, Any] = dc_field(default_factory=dict)
-
-    def may_match(self, column: str, lo: Any, hi: Any) -> bool:
-        """Could any entry's [min,max] for ``column`` overlap [lo, hi]?
-        ``None`` bounds are unbounded (-inf / +inf)."""
-        rng = self.ranges.get(column)
-        if rng is None:
-            return True  # no aggregate info -> must read
-        mn, mx = rng
-        if mn is None or mx is None:
-            return True
-        try:
-            if lo is not None and mx < lo:
-                return False
-            if hi is not None and mn > hi:
-                return False
-        except TypeError:
-            return True
-        return True
-
-    def may_contain_partition(self, key: str, values: set) -> bool:
-        """Could any entry carry one of ``values`` for partition ``key``?
-        Key absent from the summary ⇒ unknown ⇒ True.  A None summary value
-        is the hive default partition (null AND empty-string transform
-        values fold into it) — it conservatively matches any probe."""
-        summary = self.partitions.get(key)
-        if summary is None:
-            return True
-        return any(v is None or v in values for v in summary)
 
 
 _ENTRY_SCHEMA = pa.schema(

@@ -65,6 +65,12 @@ from dlt_iceberg_spark.lake.manifest import (  # noqa: F401 (re-exported)
     read_manifest,
     write_chunked,
 )
+from dlt_iceberg_spark.lake.pruning import (
+    _UTC_TZ_NAMES,
+    Predicate,
+    _aware_in_session,
+    _utc_naive,
+)
 
 #: per-group distinct-hash ceiling for grouped NDV metadata aggregates —
 #: above it the group refuses into the scan rather than shipping a
@@ -76,9 +82,7 @@ _GROUPED_NDV_CAP = 1 << 18
 #: expansion to a Spark job (lake/planning.py) at this many undecided
 #: entries — below it, job-launch latency beats the driver loop; above it,
 #: driver memory and single-threaded JSON parsing become the bottleneck.
-DISTRIBUTED_PLAN_MIN_FILES = int(
-    os.environ.get("SPARK_GRAFT_DISTRIBUTED_PLAN_MIN_FILES", "50000")
-)
+DISTRIBUTED_PLAN_MIN_FILES = 50_000
 
 _STATS_TYPES = (
     "int", "bigint", "double", "float", "string", "date",
@@ -88,16 +92,6 @@ _STATS_TYPES = (
 #: cap on (transform, value) pairs evaluated for partition-probe rewriting
 #: (table._partition_probe_values) — beyond this, stats pruning alone
 _MAX_PART_PROBE_EXPRS = 512
-
-
-def _utc_naive(v):
-    """Aware datetime -> UTC-naive (the manifest stats frame: all stored
-    timestamp stats are session-UTC naive ISO strings)."""
-    import datetime as _dt
-
-    if isinstance(v, _dt.datetime) and v.tzinfo is not None:
-        return v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-    return v
 
 
 def iso_norm_value(v: Any) -> Any:
@@ -115,29 +109,6 @@ def iso_norm_value(v: Any) -> Any:
     return v
 
 
-def _ts_prune_value(v: Any) -> str | None:
-    """Probe value -> the exact ISO form timestamp stats are stored in
-    ('YYYY-MM-DDTHH:MM:SS[.ffffff]', UTC-naive), or None when the value
-    cannot be brought into that frame — the caller then SKIPS stats
-    pruning for the predicate (conservative) while the residual Spark
-    filter still applies it exactly.  Needed because lexicographic
-    ISO-string compare is only chronological when both sides use the same
-    separator and timezone frame ('2024-01-01 10:00' sorts before
-    '2024-01-01T09:00' textually)."""
-    import datetime as _dt
-
-    if isinstance(v, str):
-        try:
-            v = _dt.datetime.fromisoformat(v.replace(" ", "T"))
-        except ValueError:
-            return None
-    if isinstance(v, _dt.datetime):
-        return _utc_naive(v).isoformat()
-    if isinstance(v, _dt.date):
-        return _dt.datetime(v.year, v.month, v.day).isoformat()
-    return None
-
-
 def _session_tz(spark) -> str:
     """Resolved ``spark.sql.session.timeZone`` (e.g. ``'Etc/UTC'`` on a
     vanilla JVM-default session).  Never pass a string default to
@@ -150,70 +121,6 @@ def _session_tz(spark) -> str:
     except Exception:
         return "UTC"
 
-
-#: session-timeZone spellings that mean UTC — normalized to "UTC" wherever a
-#: frame name is recorded or compared
-_UTC_TZ_NAMES = ("UTC", "Etc/UTC", "GMT", "Z", "+00:00")
-
-
-def _session_zone(tz_name: str):
-    """Session ``spark.sql.session.timeZone`` value -> tzinfo, or None when
-    the zone can't be resolved (caller skips pruning, conservative).
-    Handles IANA names via zoneinfo and fixed-offset forms (±HH:MM)."""
-    import datetime as _dt
-    import re as _re
-
-    if tz_name in _UTC_TZ_NAMES:
-        return _dt.timezone.utc
-    m = _re.fullmatch(r"([+-])(\d{2}):(\d{2})", tz_name)
-    if m:
-        sign = 1 if m.group(1) == "+" else -1
-        return _dt.timezone(
-            sign * _dt.timedelta(hours=int(m.group(2)), minutes=int(m.group(3)))
-        )
-    try:
-        from zoneinfo import ZoneInfo
-
-        return ZoneInfo(tz_name)
-    except Exception:
-        return None
-
-
-def _aware_in_session(v: Any, tz_name: str):
-    """Probe value -> AWARE datetime carrying the instant the residual
-    Spark filter will use: naive values are interpreted in the session
-    frame (exactly what Spark does when casting a naive string to
-    timestamp), aware values pass through.  Returns None when the session
-    zone is unresolvable or the naive local time is DST-ambiguous or
-    nonexistent — Python's fold rules and the JVM's gap normalization can
-    disagree there, and a probe that names a different instant than the
-    residual filter could prune a file that holds matching rows."""
-    import datetime as _dt
-
-    if isinstance(v, str):
-        try:
-            v = _dt.datetime.fromisoformat(v.replace(" ", "T"))
-        except ValueError:
-            return None
-    if isinstance(v, _dt.datetime) and v.tzinfo is not None:
-        return v
-    if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
-        v = _dt.datetime(v.year, v.month, v.day)
-    if not isinstance(v, _dt.datetime):
-        return None
-    z = _session_zone(tz_name)
-    if z is None:
-        return None
-    a0 = v.replace(tzinfo=z, fold=0)
-    a1 = v.replace(tzinfo=z, fold=1)
-    if a0.utcoffset() != a1.utcoffset():
-        return None  # ambiguous local time (DST fall-back hour)
-    # nonexistent local time (spring-forward gap): round-tripping through
-    # UTC does not reproduce the wall-clock value
-    back = a0.astimezone(_dt.timezone.utc).astimezone(z).replace(tzinfo=None)
-    if back != v:
-        return None
-    return a0
 
 #: residual Spark filters for `read(where=...)` predicates
 _OPS = {
@@ -228,21 +135,16 @@ _OPS = {
 }
 
 
-class _SortedProbe(list):
-    """IN-probe values known to be sorted ascending.  ``_plan_scan``
-    normalizes every sortable in-list into one so the per-file check
-    bisects (O(log n)) instead of scanning all probed values (O(n)) —
-    the difference between 1e4 and 14 comparisons per file when a
-    rollup/join-view rescan pushes a 10k-key probe over a large manifest."""
+def _staged_key(staging: str, input_file: str) -> str:
+    """``input_file_name()`` of a file written under ``staging`` -> its path
+    relative to ``staging``, the key ``FileIO.walk_files`` yields.  Base
+    names alone collide: one Spark task writes the same ``part-…`` name
+    into every hive partition directory it touches."""
+    import urllib.parse
 
-    __slots__ = ()
-
-
-def _sorted_probe(vals: Any) -> Any:
-    try:
-        return _SortedProbe(sorted(vals))
-    except TypeError:  # mixed/unorderable values: keep the linear form
-        return vals
+    path = urllib.parse.unquote(input_file)
+    marker = f"/{os.path.basename(staging.rstrip('/'))}/"
+    return path[path.rindex(marker) + len(marker) :]
 
 
 def _sketch_key_rename(key: str, col_rename) -> str:
@@ -251,78 +153,6 @@ def _sketch_key_rename(key: str, col_rename) -> str:
     if key.startswith("bloom:"):
         return f"bloom:{col_rename(key[len('bloom:'):])}"
     return col_rename(key)
-
-
-def _file_may_match(f: "DataFile", col: str, op: str, val: Any) -> bool:
-    """Can any row of ``f`` satisfy the predicate, judging by the manifest's
-    [min, max] — and, for equality probes, the entry's Bloom filter
-    (lake/bloom.py)?  Missing/incomparable stats ⇒ must assume yes."""
-    if op in ("=", "==", "in") and f.sketches:
-        from dlt_iceberg_spark.lake.bloom import sketch_keeps_file
-
-        if not sketch_keeps_file(f.sketches, col, op, val):
-            return False
-    st = f.stats.get(col)
-    if st is None:
-        return True
-    mn, mx = st
-    if mn is None or mx is None:
-        return True
-    try:
-        if op in ("=", "=="):
-            return mn <= val <= mx
-        if op == "in":  # any probed value inside the range keeps the file
-            if isinstance(val, _SortedProbe):
-                i = bisect.bisect_left(val, mn)
-                return i < len(val) and val[i] <= mx
-            return any(mn <= x <= mx for x in val)
-        if op == "!=":  # only a single-valued file can be skipped
-            return not (mn == mx == val)
-        if op == ">":
-            return mx > val
-        if op == ">=":
-            return mx >= val
-        if op == "<":
-            return mn < val
-        if op == "<=":
-            return mn <= val
-    except TypeError:  # e.g. probing a string column with an int
-        return True
-    return True
-
-
-def _file_fully_matches(f: "DataFile", col: str, op: str, val: Any) -> bool:
-    """Does EVERY row of ``f`` satisfy the predicate, judging by the
-    manifest's [min, max]?  The dual of :func:`_file_may_match`, used by
-    COUNT pushdown: a fully-matching file contributes ``f.rows`` without
-    being opened.  Missing/incomparable stats ⇒ must assume no (scan)."""
-    st = f.stats.get(col)
-    if st is None:
-        return False
-    mn, mx = st
-    if mn is None or mx is None:
-        return False
-    try:
-        if op in ("=", "=="):
-            return mn == mx == val
-        if op == "in":
-            if isinstance(val, _SortedProbe):
-                i = bisect.bisect_left(val, mn)
-                return mn == mx and i < len(val) and val[i] == mn
-            return mn == mx and mn in val
-        if op == "!=":
-            return mx < val or mn > val
-        if op == ">":
-            return mn > val
-        if op == ">=":
-            return mn >= val
-        if op == "<":
-            return mx < val
-        if op == "<=":
-            return mx <= val
-    except TypeError:
-        return False
-    return False
 
 
 def _norm_path(c: Column) -> Column:
@@ -379,28 +209,6 @@ def _nested_key_schema(
         )
 
     return build(tree)
-
-
-def _delete_may_touch(d: "DeleteFile", f: "DataFile", keys: list[str]) -> bool:
-    """Could this equality-delete file kill any row of data file ``f``?
-    Judged by key-range overlap of both sides' stats; missing stats on
-    either side ⇒ conservatively yes."""
-    if not d.stats:
-        return True
-    for k in keys:
-        ds, fs = d.stats.get(k), f.stats.get(k)
-        if not ds or not fs:
-            continue
-        dmn, dmx = ds
-        fmn, fmx = fs
-        if None in (dmn, dmx, fmn, fmx):
-            continue
-        try:
-            if dmn > fmx or fmn > dmx:  # disjoint on this key ⇒ untouchable
-                return False
-        except TypeError:
-            continue
-    return True
 
 
 @dataclass
@@ -608,7 +416,7 @@ def _collect_file_stats(
                 # range pruning keeps working; raw date objects would break
                 # the JSON manifest encoding.  Aware timestamps normalize to
                 # UTC-naive first — ONE frame for every stored stat, matched
-                # by _ts_prune_value on the probe side.
+                # by the pruning Predicate on the probe side.
                 mn, mx = _utc_naive(mn).isoformat(), _utc_naive(mx).isoformat()
             cur = stats.get(name)
             if cur is None:
@@ -1149,8 +957,7 @@ class LakeTable:
                 sketch_by_file.setdefault(name, {}).update(blooms)
         staged: list[DataFile] = []
         for rel in io.walk_files(staging):
-            name = os.path.basename(rel)
-            if not name.endswith(".parquet"):
+            if not rel.endswith(".parquet"):
                 continue
             partition: dict = {}
             rel_dir = os.path.dirname(rel)
@@ -1167,7 +974,7 @@ class LakeTable:
             if spark_stats is None:
                 rows, nbytes, stats = _collect_file_stats(abs_final, df.schema, io=io)
             else:
-                rows, stats = spark_stats.get(name, (0, {}))
+                rows, stats = spark_stats.get(rel, (0, {}))
                 nbytes = io.size(abs_final) if rows else 0
             if rows == 0:
                 io.remove(abs_final)
@@ -1179,7 +986,7 @@ class LakeTable:
                     bytes=nbytes,
                     stats=stats,
                     partition=dict(partition),
-                    sketches=sketch_by_file.get(name, {}),
+                    sketches=sketch_by_file.get(rel, {}),
                 )
             )
         io.rmtree(staging)
@@ -1191,8 +998,7 @@ class LakeTable:
         """Per-file (rows, {col: [min, max]}) for every parquet file under
         ``staging``, computed as one distributed job grouped by
         ``input_file_name()`` — O(files) tiny rows on the driver, data never
-        leaves the executors.  Keyed by file basename."""
-        import urllib.parse
+        leaves the executors.  Keyed by :func:`_staged_key`."""
         from datetime import date
 
         prunable = [
@@ -1219,8 +1025,7 @@ class LakeTable:
                     # aware values normalize to the same frame)
                     mn, mx = _utc_naive(mn).isoformat(), _utc_naive(mx).isoformat()
                 stats[c] = [mn, mx]
-            base = os.path.basename(urllib.parse.unquote(r["_f"]))
-            out[base] = (r["_rows"], stats)
+            out[_staged_key(staging, r["_f"])] = (r["_rows"], stats)
         return out
 
     def _ndv_sketches_via_spark(
@@ -1240,10 +1045,8 @@ class LakeTable:
         state is the file's distinct-hash set — bounded by the target file
         size, the same bound the sketch-building job has in any engine,
         and partial aggregation keeps it spread across executors.  Nested
-        columns are skipped (no meaningful hash frame).  Keyed by file
-        basename, like :meth:`_stats_via_spark`."""
-        import urllib.parse
-
+        columns are skipped (no meaningful hash frame).  Keyed by
+        :func:`_staged_key`, like :meth:`_stats_via_spark`."""
         dtypes = {f.name: f.dataType for f in schema.fields}
         sdf = self.spark.read.parquet(staging)
         present = [
@@ -1277,7 +1080,7 @@ class LakeTable:
                     "c": complete,
                     "t": dtypes[c].simpleString(),
                 }
-            out[os.path.basename(urllib.parse.unquote(r["_f"]))] = sk
+            out[_staged_key(staging, r["_f"])] = sk
         return out
 
     def _blooms_via_spark(
@@ -1298,9 +1101,8 @@ class LakeTable:
         so the job's memory is independent of file row count, unlike a
         distinct-set sketch.  Map-side partial ``collect_set`` keeps the
         shuffle at that same bound.  Only frames with exact Python probe
-        parity are built (BLOOM_FRAMES); other dtypes are skipped."""
-        import urllib.parse
-
+        parity are built (BLOOM_FRAMES); other dtypes are skipped.  Keyed
+        by :func:`_staged_key`."""
         from dlt_iceberg_spark.lake.bloom import (
             BLOOM_FRAMES,
             BLOOM_K,
@@ -1359,7 +1161,7 @@ class LakeTable:
                         "k": k,
                         "t": dtypes[c].simpleString(),
                     }
-            out[os.path.basename(urllib.parse.unquote(r["_f"]))] = blooms
+            out[_staged_key(staging, r["_f"])] = blooms
         return out
 
     def commit(
@@ -2023,9 +1825,9 @@ class LakeTable:
         snap = self.snapshot(snapshot_version)
         if snap is None:
             raise FileNotFoundError(f"no such table: {self.location}")
-        where, files = self._select_files(snap, where, plan_mode)
+        pred, files = self._select_files(snap, where, plan_mode)
         df = self._plan_scan(snap, files)
-        for c, op, v in where or []:
+        for c, op, v in pred.where:
             df = df.filter(_OPS[op](F.col(c), v))
         return df
 
@@ -2062,29 +1864,18 @@ class LakeTable:
         masked = self._position_masked_counts(snap)
         if not where:
             return snap.total_rows - sum(masked.values())
-        where_n, files = self._select_files(snap, list(where))
-        ts_cols = {
-            f.name
-            for f in snap.schema.fields
-            if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType))
-        }
+        pred, files = self._select_files(snap, list(where))
         full: list[DataFile] = []
         partial: list[DataFile] = []
         for f in files:
-            if all(
-                c not in ts_cols and _file_fully_matches(f, c, op, v)
-                for c, op, v in (where_n or [])
-            ):
-                full.append(f)
-            else:
-                partial.append(f)
+            (full if pred.all_match(f.stats) else partial).append(f)
         # a fully-matching file contributes its manifest row count minus
         # its live masked addresses, still unopened; straddling files take
         # the masked scan (_plan_scan applies the position deletes)
         n = sum(f.rows - masked.get(f.path, 0) for f in full)
         if partial:
             df = self._plan_scan(snap, partial)
-            for c, op, v in where_n or []:
+            for c, op, v in pred.where:
                 df = df.filter(_OPS[op](F.col(c), v))
             n += df.count()
         return n
@@ -2281,12 +2072,7 @@ class LakeTable:
             or isinstance(fld.dataType, (T.TimestampType, T.TimestampNTZType))
         )
         column = fld.name
-        where_n, files = self._select_files(snap, where)
-        ts_cols = {
-            f.name
-            for f in snap.schema.fields
-            if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType))
-        }
+        pred, files = self._select_files(snap, where)
         full: list[DataFile] = []
         partial: list[DataFile] = []
         for f in files:
@@ -2296,10 +2082,7 @@ class LakeTable:
                 and st is not None
                 and st[0] is not None
                 and st[1] is not None
-                and all(
-                    c not in ts_cols and _file_fully_matches(f, c, op, v)
-                    for c, op, v in (where_n or [])
-                )
+                and pred.all_match(f.stats)
             ):
                 full.append(f)
             else:
@@ -2308,7 +2091,7 @@ class LakeTable:
         hi = max((f.stats[column][1] for f in full), default=None)
         if partial:
             df = self._plan_scan(snap, partial)
-            for c, op, v in where_n or []:
+            for c, op, v in pred.where:
                 df = df.filter(_OPS[op](F.col(c), v))
             row = df.agg(
                 F.min(column).alias("mn"), F.max(column).alias("mx")
@@ -2486,30 +2269,17 @@ class LakeTable:
             out.pop(name, None)
         return out
 
-    @staticmethod
-    def _file_partition_may_match(f: DataFile, probes: dict[str, set]) -> bool:
-        """Could ``f`` hold a row matching every partition probe?  A file
-        from an OLDER spec (key absent — partition-spec evolution) is kept,
-        and so is a recorded NULL tuple value: hive layout folds BOTH null
-        and empty-string transform values into ``__HIVE_DEFAULT_PARTITION__``
-        (recorded None), so None must conservatively match any probe —
-        e.g. ``truncate("")`` of an empty-string row lives there."""
-        for name, vals in probes.items():
-            v = f.partition.get(name)
-            if v is not None and v not in vals:
-                return False
-        return True
-
     def _select_files(
         self,
         snap: Snapshot,
         where: list[tuple[str, str, Any]] | None,
         plan_mode: str = "auto",
-    ) -> tuple[list[tuple[str, str, Any]] | None, list[DataFile]]:
-        """Two-level stats prune shared by :meth:`read` and the delete
-        paths: returns (normalized predicates, maybe-matching files)."""
+    ) -> tuple[Predicate, list[DataFile]]:
+        """Three-level prune shared by :meth:`read`, the metadata pushdowns
+        and the delete paths: returns (the pruning predicate over the
+        normalized conjunction, maybe-matching files)."""
         if not where:
-            return where, snap.files
+            return Predicate(), snap.files
         import datetime as _dt
 
         names = {f.name for f in snap.schema.fields}
@@ -2524,8 +2294,8 @@ class LakeTable:
         # these values also feed the residual Spark filter, where a
         # UTC-naive string under a non-UTC session would be re-interpreted
         # in session time and shift the predicate by the offset.  The
-        # UTC-naive stats frame is entered later, per-predicate, by
-        # _ts_prune_value — only for pruning, never for filtering.
+        # UTC-naive stats frame is entered by the Predicate, per term —
+        # only for pruning, never for filtering.
         def _norm_v(v):
             if isinstance(v, (_dt.date, _dt.datetime)):
                 return v.isoformat()
@@ -2534,101 +2304,46 @@ class LakeTable:
             return v
 
         where = [(c, op, _norm_v(v)) for c, op, v in where]
-        # timestamp stats are UTC-naive 'T'-separated ISO strings; a probe
-        # in any other spelling (space separator, offset suffix) would
-        # compare lexicographically-wrong, so probes that cannot be brought
-        # into that frame are EXCLUDED from pruning (the residual Spark
-        # filter still applies them exactly)
-        dtypes = {f.name: f.dataType for f in snap.schema.fields}
-
-        # tz-adjusted timestamp stats decode in the UTC frame while naive
-        # probe values mean session-frame instants.  Under a non-UTC session
-        # (a vanilla driver without our configs) each naive probe is
-        # CONVERTED into the UTC stats frame through the session zone — the
-        # same instant the residual filter will use — instead of skipping
-        # pruning wholesale (VERDICT r5 task 5; real clusters run non-UTC).
-        # Probes whose local time is DST-ambiguous/nonexistent, or whose
-        # session zone can't be resolved, still skip (conservative).
-        # NTZ columns are wall-clock on both sides — always prunable as-is.
-        session_tz = _session_tz(self.spark)
-        session_utc = session_tz in _UTC_TZ_NAMES
-
-        def _ts_frame(x):
-            if session_utc:
-                return _ts_prune_value(x)
-            aware = _aware_in_session(x, session_tz)
-            return None if aware is None else _ts_prune_value(aware)
-
-        def _prunable(c, op, v):
-            dt = dtypes.get(c)
-            if not isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-                return (c, op, v)
-            conv = _ts_frame if isinstance(dt, T.TimestampType) else _ts_prune_value
-            if isinstance(v, list):
-                vs = [conv(x) for x in v]
-                return (c, op, vs) if all(x is not None for x in vs) else None
-            v2 = conv(v)
-            return (c, op, v2) if v2 is not None else None
-
-        prune_where = [p for p in (map(lambda w: _prunable(*w), where)) if p]
-        prune_where = [
-            (c, op, _sorted_probe(v)) if op == "in" else (c, op, v)
-            for c, op, v in prune_where
-        ]
-        # three-level prune, Iceberg-style: manifest aggregate ranges and
-        # partition summaries skip whole manifests unread; file [min,max]
-        # stats AND transform-rewritten partition tuples skip files
         if plan_mode not in ("auto", "driver", "spark"):
             raise ValueError(f"unknown plan_mode {plan_mode!r}")
-        part_probes = self._partition_probe_values(snap, where)
-        from dlt_iceberg_spark.lake.bloom import sketch_keeps_file
-
+        # three-level prune, Iceberg-style: manifest aggregate ranges,
+        # partition summaries and fold-OR blooms skip whole manifests
+        # unread; file [min,max] stats, transform-rewritten partition
+        # tuples and file blooms skip files
+        pred = Predicate(
+            where,
+            self._partition_probe_values(snap, where),
+            snap.schema,
+            _session_tz(self.spark),
+        )
         open_refs = [
             ref
             for ref in snap.manifests
-            if all(
-                ref.may_match(c, *self._probe_range(op, v))
-                for c, op, v in prune_where
-            )
-            and all(
-                ref.may_contain_partition(name, vals)
-                for name, vals in part_probes.items()
-            )
-            # fold-OR blooms skip whole chunks on equality probes — the
-            # manifest is never opened when no entry can hold the value
-            and all(
-                sketch_keeps_file(ref.sketches, c, op, v)
-                for c, op, v in prune_where
-            )
+            if pred.may_match(ref.ranges, ref.partitions, ref.sketches)
         ]
         n_undecided = sum(r.n_files for r in open_refs)
         use_spark = plan_mode == "spark" or (
             plan_mode == "auto" and n_undecided >= DISTRIBUTED_PLAN_MIN_FILES
         )
-        inline = [
-            f
-            for f in snap.inline_files
-            if all(_file_may_match(f, c, op, v) for c, op, v in prune_where)
-            and self._file_partition_may_match(f, part_probes)
-        ]
         if use_spark:
             from dlt_iceberg_spark.lake.planning import plan_candidates
 
-            files = inline + plan_candidates(
-                self.spark, self.location, snap.schema, open_refs, prune_where,
-                part_probes=part_probes,
+            candidates = plan_candidates(
+                self.spark, self.location, snap.schema, open_refs, pred
             )
         else:
-            expanded: list[DataFile] = []
-            for ref in open_refs:
-                expanded.extend(read_manifest(self.location, ref, io=self._io))
-            files = inline + [
+            candidates = [
                 f
-                for f in expanded
-                if all(_file_may_match(f, c, op, v) for c, op, v in prune_where)
-                and self._file_partition_may_match(f, part_probes)
+                for ref in open_refs
+                for f in read_manifest(self.location, ref, io=self._io)
+                if pred.may_match(f.stats, f.partition, f.sketches)
             ]
-        return where, files
+        inline = [
+            f
+            for f in snap.inline_files
+            if pred.may_match(f.stats, f.partition, f.sketches)
+        ]
+        return pred, inline + candidates
 
     def _physical_read(
         self,
@@ -2812,6 +2527,7 @@ class LakeTable:
         # scan path with no anti-join at all.  Files group by their exact
         # applicable-delete set (bounded by distinct applicability patterns,
         # small when deletes are localized).
+        touches = [Predicate.overlapping(d.stats, keys) for d in eq_dels]
         groups: dict[tuple[tuple[int, ...], int], list[DataFile]] = {}
         for f in files:
             fseq = f.sequence or 0
@@ -2820,9 +2536,7 @@ class LakeTable:
             ei = bisect.bisect_right(eseqs, fseq)
             pi = bisect.bisect_left(pseqs, fseq)
             eq_app = tuple(
-                j
-                for j in range(ei, len(eq_dels))
-                if _delete_may_touch(eq_dels[j], f, keys)
+                j for j in range(ei, len(eq_dels)) if touches[j].may_match(f.stats)
             )
             groups.setdefault((eq_app, pi), []).append(f)
         cols = [fld.name for fld in snap.schema.fields]
@@ -2924,11 +2638,11 @@ class LakeTable:
         snap = self.snapshot(snapshot_version)
         if snap is None:
             raise FileNotFoundError(f"no such table: {self.location}")
-        where_n, files = self._select_files(snap, where, plan_mode)
+        pred, files = self._select_files(snap, where, plan_mode)
         if not files:
             return []
         scan = self._physical_read(files, snap.schema, with_addr=True)
-        for c, op, v in where_n or []:
+        for c, op, v in pred.where:
             scan = scan.filter(_OPS[op](F.col(c), v))
         addressed = scan.select(
             F.col("__pd_path").alias("file_path"),
@@ -3323,22 +3037,17 @@ class LakeTable:
                     bounds = kdf.agg(
                         *[f for k in keys for f in (F.min(k).alias(f"_mn_{k}"), F.max(k).alias(f"_mx_{k}"))]
                     ).collect()[0]
-                    cand = [
-                        f
-                        for f in parent.files
-                        if all(
-                            bounds[f"_mn_{k}"] is None
-                            or (
-                                _file_may_match(
-                                    f, k, ">=", iso_norm_value(bounds[f"_mn_{k}"])
-                                )
-                                and _file_may_match(
-                                    f, k, "<=", iso_norm_value(bounds[f"_mx_{k}"])
-                                )
+                    envelope = Predicate.within(
+                        {
+                            k: (
+                                iso_norm_value(bounds[f"_mn_{k}"]),
+                                iso_norm_value(bounds[f"_mx_{k}"]),
                             )
                             for k in keys
-                        )
-                    ]
+                            if bounds[f"_mn_{k}"] is not None
+                        }
+                    )
+                    cand = [f for f in parent.files if envelope.may_match(f.stats)]
                     img = self._plan_scan(parent, cand).join(
                         kdf, on=keys, how="leftsemi"
                     )
@@ -4119,53 +3828,6 @@ class LakeTable:
             new_files=list(snap.inline_files),
         )
 
-    @staticmethod
-    def _probe_range(op: str, v: Any) -> tuple[Any, Any]:
-        """Predicate → [lo, hi] envelope (None = unbounded side)."""
-        if op in ("=", "=="):
-            return v, v
-        if op in (">", ">="):
-            return v, None
-        if op in ("<", "<="):
-            return None, v
-        if op == "in" and v:
-            if isinstance(v, _SortedProbe):
-                return v[0], v[-1]
-            try:
-                return min(v), max(v)
-            except TypeError:
-                return None, None
-        return None, None  # != prunes nothing at range level
-
-    def _candidate_files(
-        self, snap: Snapshot, where: list[tuple[str, str, Any]]
-    ) -> list[DataFile]:
-        """Expand only manifests whose aggregate ranges could satisfy ALL
-        predicates; skipped manifests are never read."""
-        out = list(snap.inline_files)
-        for ref in snap.manifests:
-            if all(
-                ref.may_match(c, *self._probe_range(op, v)) for c, op, v in where
-            ):
-                out.extend(read_manifest(self.location, ref, io=self._io))
-        return out
-
-    @staticmethod
-    def _file_overlaps(f: DataFile, probes: dict[str, tuple[Any, Any]]) -> bool:
-        """Conjunctive range overlap: the file may hold a matching row only
-        if its [min,max] overlaps EVERY probed column's range (missing
-        stats ⇒ assume overlap on that column)."""
-        for col, (lo, hi) in probes.items():
-            st = f.stats.get(col)
-            if st is None or st[0] is None or st[1] is None:
-                continue
-            try:
-                if (hi is not None and st[0] > hi) or (lo is not None and st[1] < lo):
-                    return False
-            except TypeError:
-                continue
-        return True
-
     def prune_split(
         self,
         snap: Snapshot,
@@ -4196,29 +3858,22 @@ class LakeTable:
         spans the whole key range (hash mixing defeats range probes), a
         merge batch touching k buckets rewrites only ~k/N of the files.
         """
-        part_probes = part_probes or {}
+        pred = Predicate.within(probes, part_probes)
         touched: list[DataFile] = []
         kept_refs: list[ManifestRef] = []
         kept_files: list[DataFile] = []
 
-        def _hits(f: DataFile) -> bool:
-            return self._file_overlaps(f, probes) and self._file_partition_may_match(
-                f, part_probes
-            )
+        def _split(files: list[DataFile]) -> None:
+            for f in files:
+                hit = pred.may_match(f.stats, f.partition)
+                (touched if hit else kept_files).append(f)
 
-        for f in snap.inline_files:
-            (touched if _hits(f) else kept_files).append(f)
+        _split(snap.inline_files)
         for ref in snap.manifests:
-            if any(
-                not ref.may_match(c, lo, hi) for c, (lo, hi) in probes.items()
-            ) or any(
-                not ref.may_contain_partition(name, vals)
-                for name, vals in part_probes.items()
-            ):
+            if pred.may_match(ref.ranges, ref.partitions):
+                _split(read_manifest(self.location, ref, io=self._io))
+            else:
                 kept_refs.append(ref)
-                continue
-            for f in read_manifest(self.location, ref, io=self._io):
-                (touched if _hits(f) else kept_files).append(f)
         return touched, kept_refs, kept_files
 
     def prune_files(

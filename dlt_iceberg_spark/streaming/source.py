@@ -54,6 +54,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from dlt_iceberg_spark.lake.pruning import Predicate
+
 #: snapshot ops a streaming tail passes through without emitting rows
 _PASS_THROUGH_OPS = (
     "evolve-schema", "evolve-partition", "rename-column", "add-column",
@@ -339,23 +341,6 @@ class _LakeStreamReader(DataSourceStreamReader):
                 mapping[f.name] = phys
         return mapping
 
-    @staticmethod
-    def _stats_overlap(entry_stats: dict, delete_stats: dict, keys: list) -> bool:
-        """Conservative file-vs-delete-envelope overlap on the key columns
-        (same check as the batch changelog's candidate prune); missing
-        stats on either side keep the file."""
-        for k in keys:
-            e = entry_stats.get(k)
-            d = delete_stats.get(k)
-            if not e or not d or e[0] is None or d[0] is None:
-                continue
-            try:
-                if e[0] > d[1] or e[1] < d[0]:
-                    return False
-            except TypeError:
-                continue
-        return True
-
     def _change_partitions(self, chain: list[dict]) -> Sequence[InputPartition]:
         parts: list[InputPartition] = []
         for raw in chain:
@@ -507,29 +492,19 @@ class _LakeStreamReader(DataSourceStreamReader):
                     # a key-localized eq-delete batch plans O(overlapping
                     # chunks), not O(table), at any inventory size.
                     # Missing stats on either side conservatively keep.
+                    envelopes = [
+                        (
+                            d,
+                            Predicate.overlapping(
+                                d.get("stats") or {}, d.get("equality_ids") or []
+                            ),
+                        )
+                        for d in new_eq
+                    ]
+
                     def _ref_may_hold_candidate(ref: dict) -> bool:
                         rngs = ref.get("ranges") or {}
-                        for d in new_eq:
-                            dstats = d.get("stats") or {}
-                            hit = True
-                            for k in list(d.get("equality_ids") or []):
-                                rng = rngs.get(k)
-                                ds = dstats.get(k)
-                                if (
-                                    not rng or not ds
-                                    or rng[0] is None or rng[1] is None
-                                    or ds[0] is None or ds[1] is None
-                                ):
-                                    continue
-                                try:
-                                    if rng[0] > ds[1] or rng[1] < ds[0]:
-                                        hit = False
-                                        break
-                                except TypeError:
-                                    continue
-                            if hit:
-                                return True
-                        return False
+                        return any(p.may_match(rngs) for _, p in envelopes)
 
                     eq_entries = (
                         parent_entries
@@ -543,13 +518,9 @@ class _LakeStreamReader(DataSourceStreamReader):
                         f_seq = f.get("sequence") or 0
                         applicable = [
                             d
-                            for d in new_eq
+                            for d, p in envelopes
                             if (d.get("sequence") or 0) > f_seq
-                            and self._stats_overlap(
-                                f.get("stats", {}),
-                                d.get("stats", {}),
-                                list(d.get("equality_ids") or []),
-                            )
+                            and p.may_match(f.get("stats", {}))
                         ]
                         if not applicable:
                             continue

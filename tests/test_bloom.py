@@ -8,6 +8,7 @@ parquet bloom recipe.
 """
 
 import datetime
+import os
 
 import pytest
 from hypothesis import given, settings
@@ -24,7 +25,14 @@ from dlt_iceberg_spark.lake.bloom import (
     pack_positions,
     probe_positions,
 )
-from dlt_iceberg_spark.lake.table import LakeTable, _file_may_match
+from dlt_iceberg_spark.lake.pruning import Predicate
+from dlt_iceberg_spark.lake.table import LakeTable
+
+
+def _kept(files, col, op, val):
+    """Entries the pruning evaluator keeps for one probe."""
+    pred = Predicate([(col, op, val)])
+    return [f for f in files if pred.may_match(f.stats, f.partition, f.sketches)]
 
 
 @pytest.fixture(scope="module")
@@ -121,7 +129,7 @@ def test_malformed_bloom_is_conservative():
 def test_bloom_prunes_scattered_key(scattered_table):
     t, files, df = scattered_table
     k_val = (123 * 7919) % 100000
-    kept = [f for f in files if _file_may_match(f, "k", "=", k_val)]
+    kept = _kept(files, "k", "=", k_val)
     assert len(kept) <= 2  # 1 true + FPR slack; stats alone keep all 8
     assert t.read(where=[("k", "=", k_val)]).count() == 1
 
@@ -129,7 +137,7 @@ def test_bloom_prunes_scattered_key(scattered_table):
 def test_bloom_all_frames_prune_and_stay_exact(scattered_table):
     t, files, df = scattered_table
     assert t.read(where=[("s", "=", "doc-777")]).count() == 1
-    assert len([f for f in files if _file_may_match(f, "s", "=", "doc-777")]) <= 2
+    assert len(_kept(files, "s", "=", "doc-777")) <= 2
     assert t.read(where=[("ik", "=", 778)]).count() == 1
     dv = datetime.date(2020, 1, 1) + datetime.timedelta(days=5)
     expect = df.filter(F.col("d") == F.lit(dv)).count()
@@ -138,7 +146,7 @@ def test_bloom_all_frames_prune_and_stay_exact(scattered_table):
 
 def test_bloom_proves_absence(scattered_table):
     t, files, _ = scattered_table
-    kept = [f for f in files if _file_may_match(f, "s", "=", "doc-nope-xyz")]
+    kept = _kept(files, "s", "=", "doc-nope-xyz")
     assert kept == []
     assert t.read(where=[("s", "=", "doc-nope-xyz")]).count() == 0
 
@@ -147,9 +155,7 @@ def test_bloom_in_probe(scattered_table):
     t, files, _ = scattered_table
     assert t.read(where=[("ik", "in", [5, 6, 99999999])]).count() == 2
     # all-absent IN prunes everything
-    kept = [
-        f for f in files if _file_may_match(f, "ik", "in", [99999998, 99999999])
-    ]
+    kept = _kept(files, "ik", "in", [99999998, 99999999])
     assert kept == []
 
 
@@ -183,7 +189,7 @@ def test_rename_keeps_bloom_under_new_name(spark, tmp_path):
     entries = snap.files
     assert any(bloom_key("key") in f.sketches for f in entries)
     assert all(bloom_key("k") not in f.sketches for f in entries)
-    kept = [f for f in entries if _file_may_match(f, "key", "=", 31)]
+    kept = _kept(entries, "key", "=", 31)
     assert len(kept) <= 2
     assert t.read(where=[("key", "=", 31)]).count() == 1
 
@@ -247,3 +253,30 @@ def test_promotion_keeps_bloom_sound(spark, tmp_path):
     # ...and out-of-int-range probes keep files conservatively (the file
     # cannot contain them, but the bloom must never crash or mis-skip)
     assert t.read(where=[("k", "=", 1 << 40)]).count() == 0
+
+
+def test_partitioned_bloom_point_lookups_find_every_row(spark, tmp_path):
+    """One Spark task writes the same ``part-…`` base name into every hive
+    partition directory it touches.  Each staged file must keep its OWN
+    bloom — a file carrying another file's bits gets skipped by a point
+    lookup for a key it holds, and the row silently goes missing."""
+    from dlt_iceberg_spark.partition import PartitionField, partition_columns
+
+    t = LakeTable(spark, str(tmp_path / "pbloom"))
+    df = spark.range(0, 4000).select(
+        (F.col("id") * 7919 % 100003).alias("k"), (F.col("id") % 3).alias("p")
+    ).repartition(2)  # 2 tasks x 3 partitions: colliding base names
+    spec = [PartitionField(column="p", transform="identity")]
+    files = t.stage_dataframe(
+        df, partition_exprs=partition_columns(spec), bloom_columns=["k"]
+    )
+    t.commit(files, df.schema, "create", None, partition_spec=[vars(s) for s in spec])
+    assert len(files) == 6 and all(bloom_key("k") in f.sketches for f in files)
+    # metadata level: the file holding each key keeps it under its bloom
+    by_name = {os.path.basename(f.path): f for f in files}
+    for r in t.read().select("k", F.input_file_name().alias("f")).collect():
+        f = by_name[os.path.basename(r.f)]
+        assert Predicate([("k", "=", r.k)]).may_match(f.stats, f.partition, f.sketches)
+    # end to end: every point lookup returns its row
+    for k in [r.k for r in df.select("k").collect()][::97]:
+        assert t.read(where=[("k", "=", k)]).count() == 1

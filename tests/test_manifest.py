@@ -350,20 +350,20 @@ def test_distributed_planner_on_100k_files(big_table):
     planner's file set while the executors, not the driver, evaluate the
     100k stats rows."""
     from dlt_iceberg_spark.lake.planning import plan_candidates
-    from dlt_iceberg_spark.lake.table import _file_may_match
+    from dlt_iceberg_spark.lake.pruning import Predicate
 
     snap = big_table.snapshot()
-    where = [("k2", ">=", 500_000), ("k2", "<=", 500_499)]
+    pred = Predicate([("k2", ">=", 500_000), ("k2", "<=", 500_499)])
     dist = sorted(
         f.path
         for f in plan_candidates(
-            big_table.spark, big_table.location, SCHEMA, snap.manifests, where
+            big_table.spark, big_table.location, SCHEMA, snap.manifests, pred
         )
     )
     driver = sorted(
         f.path
         for f in snap.files
-        if all(_file_may_match(f, c, op, v) for c, op, v in where)
+        if pred.may_match(f.stats, f.partition, f.sketches)
     )
     assert dist == driver and len(dist) == 50
 

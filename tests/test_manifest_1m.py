@@ -152,11 +152,13 @@ def test_1m_distributed_planner_survivor_only_collect(mega_table):
     a driver plan would — and ONLY those (the collect that reaches the
     driver is the 50-row survivor set, not the million-entry inventory)."""
     from dlt_iceberg_spark.lake.planning import plan_candidates
+    from dlt_iceberg_spark.lake.pruning import Predicate
 
     snap = mega_table.snapshot()
     where = [("k", ">=", 7_000_000), ("k", "<=", 7_000_499)]
     survivors = plan_candidates(
-        mega_table.spark, mega_table.location, SCHEMA, snap.manifests, where
+        mega_table.spark, mega_table.location, SCHEMA, snap.manifests,
+        Predicate(where),
     )
     assert len(survivors) == 50
     assert all(
@@ -176,6 +178,7 @@ def test_1m_partition_probe_pushdown_collects_one_bucket(mega_table):
     the driver was always going to need), never the full million rows —
     the scale property behind bucket-partitioned point lookups."""
     from dlt_iceberg_spark.lake.planning import plan_candidates
+    from dlt_iceberg_spark.lake.pruning import Predicate
 
     snap = mega_table.snapshot()
     survivors = plan_candidates(
@@ -183,8 +186,7 @@ def test_1m_partition_probe_pushdown_collects_one_bucket(mega_table):
         mega_table.location,
         SCHEMA,
         snap.manifests,
-        where=[],
-        part_probes={"k_bucket": {"3"}},
+        Predicate([], {"k_bucket": {"3"}}),
     )
     # earlier module tests appended a few files without the bucket key —
     # those must be KEPT (spec evolution semantics); bucket-3 files are
@@ -197,8 +199,7 @@ def test_1m_partition_probe_pushdown_collects_one_bucket(mega_table):
         mega_table.location,
         SCHEMA,
         snap.manifests,
-        where=[("k", ">=", 0), ("k", "<=", 799_999)],
-        part_probes={"k_bucket": {"3"}},
+        Predicate([("k", ">=", 0), ("k", "<=", 799_999)], {"k_bucket": {"3"}}),
     )
     assert len(both) == 10_000  # 80k files in range / 8 buckets
 

@@ -585,3 +585,41 @@ def test_overlap_rejects_unknown_column(spark, tmp_path):
     ds = _catalog_pair(spark, tmp_path, da, da, ["v"])
     with pytest.raises(ValueError, match="no such column"):
         ds.overlap("a", "b", "nope")
+
+
+def test_partitioned_write_sketches_each_file_own_values(spark, tmp_path):
+    """Per-file NDV sketches and stats on a PARTITIONED write: one Spark
+    task writes the same base name into every partition directory, so
+    results keyed by base name cross-wire files.  Each file's sketch must
+    be exactly its own distinct-hash set."""
+    from dlt_iceberg_spark.partition import PartitionField, partition_columns
+
+    t = _mk_table(spark, tmp_path, "pndv")
+    df = spark.range(0, 600).select(
+        F.col("id").alias("u"), (F.col("id") % 3).alias("p")
+    ).repartition(2)  # 2 tasks x 3 partitions
+    spec = [PartitionField(column="p", transform="identity")]
+    files = t.stage_dataframe(
+        df, partition_exprs=partition_columns(spec), ndv_columns=["u", "p"]
+    )
+    assert len(files) == 6
+    rows = (
+        spark.read.parquet(*[os.path.join(t.location, f.path) for f in files])
+        .select(F.input_file_name().alias("f"), F.xxhash64("u").alias("h"))
+        .collect()
+    )
+    truth: dict[str, set] = {}
+    for r in rows:
+        truth.setdefault(os.path.basename(r.f), set()).add(r.h)
+    for f in files:
+        assert f.sketches["u"]["c"] and set(f.sketches["u"]["h"]) == truth[
+            os.path.basename(f.path)
+        ]
+        assert len(f.sketches["p"]["h"]) == 1  # one partition value per file
+    # the distributed stats path (non-local FileIO) keys the same way
+    staging = str(tmp_path / "pstage")
+    df.write.partitionBy("p").parquet(staging)
+    stats = t._stats_via_spark(staging, df.schema)
+    written = [r for r in t._io.walk_files(staging) if r.endswith(".parquet")]
+    assert sorted(stats) == sorted(written)
+    assert sum(n for n, _ in stats.values()) == 600

@@ -9,9 +9,15 @@ import os
 import pytest
 from pyspark.sql import types as T
 
-from dlt_iceberg_spark.lake.manifest import DataFile, write_chunked
-from dlt_iceberg_spark.lake.planning import plan_candidates
-from dlt_iceberg_spark.lake.table import LakeTable, _file_may_match
+from dlt_iceberg_spark.lake.manifest import (
+    DataFile,
+    _aggregate_partitions,
+    aggregate_ranges,
+    write_chunked,
+)
+from dlt_iceberg_spark.lake.planning import entries_df, plan_candidates
+from dlt_iceberg_spark.lake.pruning import Predicate
+from dlt_iceberg_spark.lake.table import LakeTable
 
 SCHEMA = T.StructType(
     [
@@ -86,27 +92,41 @@ PREDICATES = [
 @pytest.mark.parametrize("where", PREDICATES, ids=[str(w) for w in PREDICATES])
 def test_spark_planner_matches_driver_planner(manifest_set, where):
     spark, loc, files, refs = manifest_set
+    pred = Predicate(where)
     driver = sorted(
-        f.path
-        for f in files
-        if all(_file_may_match(f, c, op, v) for c, op, v in where)
+        f.path for f in files if pred.may_match(f.stats, f.partition, f.sketches)
     )
     dist = sorted(
-        f.path for f in plan_candidates(spark, loc, SCHEMA, refs, where)
+        f.path for f in plan_candidates(spark, loc, SCHEMA, refs, pred)
     )
     assert dist == driver
     # sanity: the probes actually prune (otherwise this test proves
     # nothing) — except !=, which by design only skips single-valued files
     if not any(op == "!=" for _, op, _ in where):
         assert len(driver) < N
+    # evaluator properties: strict ⇒ inclusive, per file
+    assert all(pred.may_match(f.stats) for f in files if pred.all_match(f.stats))
+    # the executor-side filter keeps a superset of the inclusive survivors
+    raw = entries_df(spark, loc, refs).filter(pred.to_column(SCHEMA))
+    assert {r.path for r in raw.select("path").collect()} >= set(driver)
+    # a manifest-level rejection (aggregate ranges + partition summary)
+    # never hides a member that passes the file-level check
+    for i in range(0, N, 97):
+        chunk = files[i : i + 97]
+        if not pred.may_match(aggregate_ranges(chunk), _aggregate_partitions(chunk)):
+            assert not any(pred.may_match(f.stats, f.partition) for f in chunk)
 
 
 def test_spark_planner_keeps_missing_and_unbounded_stats(manifest_set):
     spark, loc, files, refs = manifest_set
-    got = {f.path for f in plan_candidates(spark, loc, SCHEMA, refs, [("score", ">", 1e9)])}
+
+    def survivors(where):
+        return {f.path for f in plan_candidates(spark, loc, SCHEMA, refs, Predicate(where))}
+
+    got = survivors([("score", ">", 1e9)])
     # only files WITHOUT score stats may survive an impossible probe
     assert got == {f.path for f in files if "score" not in f.stats}
-    got = {f.path for f in plan_candidates(spark, loc, SCHEMA, refs, [("id", "=", -1)])}
+    got = survivors([("id", "=", -1)])
     assert got == {f.path for f in files if f.stats["id"][0] is None}
 
 
@@ -457,26 +477,20 @@ def test_in_probe_prunes_gappy_key_sets_tighter_than_range(spark, tmp_path):
 
 
 def test_sorted_probe_bisect_matches_linear_scan():
-    """_SortedProbe's bisect check is exactly equivalent to the linear
-    any()-scan, across random probe sets and file ranges."""
+    """The evaluator's bisected in-list check is exactly equivalent to the
+    linear any()-scan, across random probe sets and file ranges — and its
+    strict dual to "single-valued range holding a probed value"."""
     import random
-
-    from dlt_iceberg_spark.lake.table import _SortedProbe, _sorted_probe
 
     rng = random.Random(42)
     for _ in range(500):
         vals = sorted(rng.sample(range(1000), rng.randint(1, 30)))
         mn = rng.randint(0, 999)
-        mx = mn + rng.randint(0, 200)
-        f = DataFile(
-            path="x", rows=1, bytes=1, stats={"k": [mn, mx]}, partition={},
-            sequence=1,
-        )
-        probe = _sorted_probe(vals)
-        assert isinstance(probe, _SortedProbe)
-        assert _file_may_match(f, "k", "in", probe) == any(
-            mn <= x <= mx for x in vals
-        )
-    # unsortable mixed values fall back to the linear container untouched
-    mixed = _sorted_probe([1, "a"])
-    assert not isinstance(mixed, _SortedProbe) and mixed == [1, "a"]
+        mx = mn + rng.randint(0, 200) * rng.randint(0, 1)
+        pred = Predicate([("k", "in", rng.sample(vals, len(vals)))])
+        assert pred.may_match({"k": [mn, mx]}) == any(mn <= x <= mx for x in vals)
+        assert pred.all_match({"k": [mn, mx]}) == (mn == mx and mn in vals)
+    # unsortable mixed values fall back to the linear scan, conservatively
+    mixed = Predicate([("k", "in", [1, "a"])])
+    assert mixed.may_match({"k": [0, 5]}) and mixed.may_match({"k": [5, 9]})
+    assert not mixed.all_match({"k": [5, 9]})

@@ -356,6 +356,11 @@ def test_prune_split_is_conservative_and_complete(tmp_path_factory, files, probe
     touched_paths = {f.path for f in touched}
     expected = {f.path for f in entries if brute_may_match(f)}
     assert touched_paths == expected  # conservative AND tight at file level
+    # the evaluator behind prune_split: strict ⇒ inclusive on every file
+    from dlt_iceberg_spark.lake.pruning import Predicate
+
+    pred = Predicate.within(probes)
+    assert all(pred.may_match(f.stats) for f in entries if pred.all_match(f.stats))
 
     # partition property: every file accounted for exactly once
     kept_ref_count = sum(r.n_files for r in kept_refs)

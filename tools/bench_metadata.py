@@ -11,11 +11,12 @@ full-inventory rewrite that replace/compaction-style operations pay.
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import types as T  # noqa: E402
 
