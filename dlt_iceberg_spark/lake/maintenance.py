@@ -832,8 +832,6 @@ def consolidate_position_deletes(table: LakeTable) -> dict:
         snap.schema,
         "consolidate-deletes",
         snap.version,
-        manifests=list(snap.manifests),
-        new_files=list(snap.inline_files),
         delete_files=others + new_deletes,
         summary={
             "consolidated-delete-files": len(pos),

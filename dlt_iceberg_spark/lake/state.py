@@ -105,10 +105,7 @@ class StateStore:
                 df = cast_dataframe_safe(df, stored)
         snap = table.snapshot()
         files = table.stage_dataframe(df)
-        table.commit(
-            None, stored, "append", snap.version,
-            manifests=snap.manifests, new_files=snap.inline_files + files,
-        )
+        table.commit(None, stored, "append", snap.version, new_files=files)
 
     # -- M4: schema registry ----------------------------------------------
 

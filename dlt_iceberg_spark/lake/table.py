@@ -217,9 +217,11 @@ class Snapshot:
 
     The live file set is ``manifests`` (chunked parquet manifests, reused
     across commits) plus ``inline_files`` (entries not yet folded into a
-    manifest — legacy snapshots only).  ``files`` expands everything on
-    first access; commit/prune paths avoid it so driver work stays
-    O(touched files), never O(table).
+    manifest — legacy snapshots only).  ``inline_files`` is internal to the
+    loader: ``LakeTable.commit`` folds it into the next snapshot's manifests
+    when a commit inherits the parent's live set, so callers never carry it
+    by hand.  ``files`` expands everything on first access; commit/prune
+    paths avoid it so driver work stays O(touched files), never O(table).
     """
 
     version: int
@@ -1181,22 +1183,31 @@ class LakeTable:
     ) -> Snapshot:
         """Atomically publish a new snapshot.
 
-        Two forms:
+        Three forms for the live file set:
 
-        - ``files=[...]`` — the FULL live-file set (full-rewrite operations:
-          replace, compaction, z-order).  Entries are chunked into fresh
-          parquet manifests; driver cost O(given files), which such
-          operations pay anyway.
-        - ``manifests=[refs], new_files=[...]`` — the delta form: parent
-          manifests are REUSED by reference (never read), added files become
-          one new manifest.  An append to an 800k-file table touches only
-          the entries it adds — this is Iceberg's manifest-list design and
-          the reason commits stay O(touched) at any table size.
+        - ``files=[...]`` — full: the complete live set (replace,
+          compaction, z-order, clone, import; ``[]`` truncates).  Entries
+          are chunked into fresh parquet manifests; driver cost O(given
+          files), which such operations pay anyway.
+        - ``manifests=[refs], new_files=[...]`` — subset: the given refs
+          are reused by reference (never read) and ``new_files`` become one
+          new manifest; whatever the parent held outside them is dropped
+          (CoW merge, partition replace, rollback, and the column DDL
+          that rewrites entries).
+        - neither — inherit: the parent's manifests are reused by
+          reference, its legacy inline entries are folded into the new
+          manifest, and ``new_files`` (none = metadata-only commit) are
+          added.  An append to an 800k-file table touches only the entries
+          it adds — Iceberg's manifest-list design, and the reason commits
+          stay O(touched) at any table size.  Inherited entries do not
+          count as added in the summary.
 
-        ``delete_files`` is the snapshot's FULL equality-delete set (None =
-        no deletes — callers rewriting the table clear them implicitly;
-        merge-on-read callers pass parent's list + their new file).  Files
-        with ``sequence=None`` are stamped with the new version — equality
+        ``delete_files``, ``partition_spec``, ``properties`` and
+        ``field_ids`` follow the same rule: None inherits the parent's
+        value.  ``delete_files`` is the snapshot's FULL delete set —
+        rewriting callers clear it with ``[]``, merge-on-read callers pass
+        the parent's list plus their new files.  Files with
+        ``sequence=None`` are stamped with the new version — equality
         deletes apply only to data files with a strictly smaller sequence,
         so a delete committed alongside new data masks old rows, never the
         rows landing in the same commit.
@@ -1207,13 +1218,6 @@ class LakeTable:
         """
         if files is not None and (manifests is not None or new_files is not None):
             raise ValueError("pass files=... OR manifests=/new_files=, not both")
-        if files is None and manifests is None and new_files is None:
-            # a fully-empty delta would silently publish an EMPTY table; an
-            # intentional truncate must say so with files=[]
-            raise ValueError(
-                "commit needs files=[...] (full set; [] truncates) or "
-                "manifests=/new_files= (delta)"
-            )
         self._io.makedirs(self._meta_dir)
         # For catalog-owned pointers, remember the branch ref's RAW head at
         # check time: None means this commit FORKS the branch (CAS expected
@@ -1275,14 +1279,21 @@ class LakeTable:
                 for f in fl
             ]
 
+        carried: list[DataFile] = []
         if files is not None:
             _added = stamp(files)
             refs = write_chunked(self.location, _added, io=self._io)
         else:
+            if manifests is None and prev is not None:
+                # inherit: legacy inline entries fold into the new manifest
+                # but are not counted as added
+                manifests, carried = prev.manifests, prev.inline_files
             refs = list(manifests or [])
             _added = stamp(new_files or [])
-            if _added:
-                refs.extend(write_chunked(self.location, _added, io=self._io))
+            if carried or _added:
+                refs.extend(
+                    write_chunked(self.location, [*carried, *_added], io=self._io)
+                )
             # fold accumulated micro-manifests (reads only the small ones)
             refs = compact_refs(self.location, refs, io=self._io)
         # None = inherit: an append/evolve on a merge-on-read table must not
@@ -1358,7 +1369,7 @@ class LakeTable:
             if t
         }
         dtype_of = {f.name: f.dataType for f in schema.fields}
-        if (files or new_files) and any(
+        if (_added or carried) and any(
             isinstance(
                 dtype_of.get(p.get("column") or p.get("source") or ""),
                 T.TimestampType,
@@ -2682,8 +2693,6 @@ class LakeTable:
             snap.schema,
             "delete",
             snap.version,
-            manifests=snap.manifests,
-            new_files=list(snap.inline_files),
             delete_files=list(snap.delete_files) + new_deletes,
             summary={
                 "position-delete-files": len(new_deletes),
@@ -2747,8 +2756,7 @@ class LakeTable:
             snap.schema,
             "merge",
             snap.version,
-            manifests=snap.manifests,
-            new_files=list(snap.inline_files) + new_files,
+            new_files=new_files,
             delete_files=list(snap.delete_files) + new_deletes,
             summary={
                 "update-position-delete-files": len(new_deletes),
@@ -3601,9 +3609,6 @@ class LakeTable:
             snap.version,
             properties=props,
             summary={"dropped-column": col},
-            delete_files=list(snap.delete_files),
-            manifests=list(snap.manifests),
-            new_files=list(snap.inline_files),
         )
 
     def add_column(
@@ -3675,9 +3680,8 @@ class LakeTable:
         new_schema = T.StructType(
             list(snap.schema.fields) + [T.StructField(name, dtype, True, meta)]
         )
-        ids = None
-        manifests: list[ManifestRef] | None = list(snap.manifests)
-        inline = list(snap.inline_files)
+        # None/None inherits the parent's live set untouched
+        ids = manifests = inline = None
         # a name the table has EVER used is dangerous to re-add bare: after
         # drop/re-add the old pages hold the DROPPED values, and after a
         # rename-away chain (c0→c1, add c0) live files still carry physical
@@ -3728,7 +3732,7 @@ class LakeTable:
                     _guard(e) for e in read_manifest(self.location, ref, io=self._io)
                 ]
                 manifests.extend(write_chunked(self.location, entries, io=self._io))
-            inline = [_guard(e) for e in inline]
+            inline = [_guard(e) for e in snap.inline_files]
             ids = dict(snap.field_ids)
             ids[name] = max(ids.values(), default=0) + 1
         return self.commit(
@@ -3737,7 +3741,6 @@ class LakeTable:
             "add-column",
             snap.version,
             summary={"added-column": f"{name} {dtype.simpleString()}"},
-            delete_files=list(snap.delete_files),
             manifests=manifests,
             new_files=inline,
             field_ids=ids,
@@ -3823,9 +3826,6 @@ class LakeTable:
                     f"{col}: {old_type.simpleString()} -> {new_type.simpleString()}"
                 )
             },
-            delete_files=list(snap.delete_files),
-            manifests=list(snap.manifests),
-            new_files=list(snap.inline_files),
         )
 
     def prune_split(

@@ -42,7 +42,7 @@ from dlt_iceberg_spark.errors import (
 )
 from dlt_iceberg_spark.lake.catalog import LakeCatalog
 from dlt_iceberg_spark.lake.merge import merge_plan
-from dlt_iceberg_spark.lake.table import DataFile, LakeTable
+from dlt_iceberg_spark.lake.table import DataFile, DeleteFile, LakeTable
 from dlt_iceberg_spark.partition import build_partition_spec, partition_columns
 from dlt_iceberg_spark.schema.casting import cast_dataframe_safe
 from dlt_iceberg_spark.schema.converter import infer_schema
@@ -371,7 +371,7 @@ class LakeWriter:
             # conflict-retry cost is O(commit), never O(batch) (at 100 TB
             # restaging a batch to resolve a millisecond pointer race would
             # dominate the write path under any concurrency).
-            self._commit_append_on_head(table, target_schema, summary, new_files)
+            self._commit_on_head(table, target_schema, "append", summary, new_files)
         elif disposition == "replace":
             scope = (
                 spec.write_disposition.get("scope")
@@ -398,21 +398,31 @@ class LakeWriter:
             self.observer(spec.name)
         return table
 
-    # -- conflict-cheap append commits -------------------------------------
+    # -- conflict-cheap head commits ---------------------------------------
 
     class _ConcurrentSchemaChange(Exception):
-        """Head schema moved between staging and commit — the batch must
-        replay through create-or-evolve (non-retryable on purpose: the
-        fast commit loop hands it back to the full write retry)."""
+        """Head schema (or, for merge-on-read, its delete key set) moved
+        between staging and commit — the batch must replay through
+        create-or-evolve (non-retryable on purpose: the fast commit loop
+        hands it back to the full write retry)."""
 
-    def _commit_append_on_head(
-        self, table: LakeTable, target_schema, summary: dict, new_files: list[DataFile]
+    def _commit_on_head(
+        self,
+        table: LakeTable,
+        target_schema,
+        operation: str,
+        summary: dict,
+        new_files: list[DataFile],
+        keys: list[str] | None = None,
+        new_delete_files: list[DeleteFile] | None = None,
     ) -> None:
-        """Commit staged append files against whatever the CURRENT head is,
-        retrying lost commit races without restaging (staged files are
-        head-independent; the race costs O(commit), not O(batch)).  A
-        concurrent schema evolution aborts the fast path — the outer write
-        retry re-evolves and re-casts the batch."""
+        """Commit staged files (and, for merge-on-read, staged equality
+        deletes over ``keys``) against whatever the CURRENT head is,
+        retrying lost commit races without restaging: staged files are
+        head-independent and sequence numbers stamp at commit, so the race
+        costs O(commit), not O(batch).  A concurrent schema evolution — or,
+        for merge-on-read, a change of the delete key set — aborts the fast
+        path; the outer write retry re-evolves and re-casts the batch."""
         expected = target_schema.json()
         policy = RetryPolicy(self.config.max_retries, self.config.retry_backoff_base)
 
@@ -420,16 +430,25 @@ class LakeWriter:
             head = table.snapshot()
             if head.schema is not None and head.schema.json() != expected:
                 raise LakeWriter._ConcurrentSchemaChange()
+            if keys is not None and any(
+                tuple(d.equality_ids) != tuple(keys) for d in head.delete_files
+            ):
+                # a concurrent load changed the key set: replay fully
+                raise LakeWriter._ConcurrentSchemaChange()
             table.commit(
-                None, target_schema, "append", head.version, summary=summary,
-                manifests=head.manifests, new_files=head.inline_files + new_files,
+                None, target_schema, operation, head.version, summary=summary,
+                new_files=new_files,
+                delete_files=(
+                    list(head.delete_files) + new_delete_files
+                    if new_delete_files else None
+                ),
             )
 
         try:
             policy.run(attempt)
         except LakeWriter._ConcurrentSchemaChange:
             raise CommitConflictError(
-                "concurrent schema change during append; replaying load"
+                f"concurrent schema change during {operation}; replaying load"
             ) from None
 
     # -- create / evolve ---------------------------------------------------
@@ -486,7 +505,6 @@ class LakeWriter:
             table.commit(
                 None, evolved, op, snap.version, partition_spec=new_pspec,
                 properties=props_update,
-                manifests=snap.manifests, new_files=snap.inline_files,
             )
         return table, evolved
 
@@ -669,7 +687,7 @@ class LakeWriter:
                 bloom_columns=spec.resolve_bloom_columns(),
                 ndv_columns=spec.resolve_ndv_columns(),
             )
-            self._commit_append_on_head(table, target_schema, summary, new_files)
+            self._commit_on_head(table, target_schema, "append", summary, new_files)
             return
 
         if snap.delete_files:
@@ -855,43 +873,20 @@ class LakeWriter:
             bloom_columns=keys,
             ndv_columns=ndv,
         )
-        # staged data + delete files are head-independent (sequence numbers
-        # stamp at commit), so a lost commit race re-commits against the new
-        # head without restaging — O(commit) conflict retry, like append
-        expected = target_schema.json()
-        policy = RetryPolicy(self.config.max_retries, self.config.retry_backoff_base)
-
-        def attempt() -> None:
-            head = table.snapshot()
-            if head.schema is not None and head.schema.json() != expected:
-                raise LakeWriter._ConcurrentSchemaChange()
-            if head.delete_files and any(
-                tuple(d.equality_ids) != tuple(keys) for d in head.delete_files
-            ):
-                # a concurrent load changed the key set: replay fully
-                raise LakeWriter._ConcurrentSchemaChange()
-            table.commit(
-                None,
-                target_schema,
-                "merge-mor",
-                head.version,
-                manifests=head.manifests,
-                new_files=head.inline_files + new_files,
-                delete_files=list(head.delete_files) + new_delete_files,
-                summary={
-                    **summary,
-                    "strategy": strategy,
-                    "merge_mode": "mor",
-                    "added-delete-files": len(new_delete_files),
-                },
-            )
-
-        try:
-            policy.run(attempt)
-        except LakeWriter._ConcurrentSchemaChange:
-            raise CommitConflictError(
-                "concurrent schema/key change during merge-mor; replaying load"
-            ) from None
+        self._commit_on_head(
+            table,
+            target_schema,
+            "merge-mor",
+            {
+                **summary,
+                "strategy": strategy,
+                "merge_mode": "mor",
+                "added-delete-files": len(new_delete_files),
+            },
+            new_files,
+            keys=keys,
+            new_delete_files=new_delete_files,
+        )
 
 
 def commit_load(

@@ -468,9 +468,7 @@ def append_vectors(table, batch: DataFrame) -> Any:
             head.schema,
             "append",
             head.version,
-            manifests=head.manifests,
-            new_files=list(head.inline_files) + new_files,
-            delete_files=list(head.delete_files),
+            new_files=new_files,
             summary={"vectors-appended": sum(f.rows for f in new_files)},
         )
 
@@ -522,8 +520,6 @@ def delete_vectors(table, ids: DataFrame) -> Any:
             head.schema,
             "delete",
             head.version,
-            manifests=head.manifests,
-            new_files=list(head.inline_files),
             delete_files=list(head.delete_files) + new_deletes,
             summary={"vector-delete-keys": sum(d.rows for d in new_deletes)},
         )

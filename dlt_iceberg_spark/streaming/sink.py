@@ -399,10 +399,7 @@ class _LakeStreamWriter(DataSourceStreamArrowWriter):
                     self.schema,
                     "append",
                     snap.version if snap else None,
-                    partition_spec=list(snap.partition_spec) if snap else [],
-                    manifests=list(snap.manifests) if snap else [],
-                    new_files=(list(snap.inline_files) if snap else []) + staged,
-                    delete_files=list(snap.delete_files) if snap else [],
+                    new_files=staged,
                     properties=props,
                     summary={"stream-batch-id": batchId},
                 )

@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import types as T
 
 import dlt_iceberg_spark.lake.table as table_mod
-from dlt_iceberg_spark.lake.manifest import MANIFEST_CHUNK, DataFile
+from dlt_iceberg_spark.lake.manifest import MANIFEST_CHUNK, DataFile, DeleteFile
 from dlt_iceberg_spark.lake.table import LakeTable
 
 N_FILES = 100_000
@@ -161,6 +161,18 @@ def test_legacy_inline_files_snapshot_still_reads(spark, tmp_path):
     assert [f.path for f in snap.files] == ["data/a.parquet"]
     assert snap.files[0].sequence == 0
     assert snap.n_files == 1 and snap.total_rows == 3
+    # an append on the legacy snapshot folds the inline entry into the new
+    # manifest: still live, not counted as added, sequence unchanged
+    s1 = t.commit(
+        None, SCHEMA, "append", snap.version,
+        new_files=[DataFile(path="data/b.parquet", rows=2, bytes=50)],
+    )
+    assert s1.inline_files == []
+    seq = {f.path: f.sequence for f in s1.files}
+    assert seq == {"data/a.parquet": 0, "data/b.parquet": s1.version}
+    assert s1.summary["added-data-files"] == 1
+    assert s1.summary["added-records"] == 2
+    assert s1.summary["total-data-files"] == 2
 
 
 def test_micro_append_manifests_get_compacted(spark, tmp_path):
@@ -330,17 +342,49 @@ def test_partition_overwrite_skips_disjoint_manifests(spark, tmp_path, monkeypat
     assert rows == {("A", 1), ("A", 2), ("B", 30)}
 
 
-def test_commit_rejects_fully_empty_delta(spark, tmp_path):
-    """commit(None) with neither manifests nor new_files would silently
-    truncate; it must fail loudly (files=[] is the explicit truncate)."""
+def test_commit_none_inherits_and_empty_files_truncates(spark, tmp_path):
+    """commit(None) with neither manifests nor new_files is a metadata-only
+    commit that keeps every live file; files=[] is the explicit truncate."""
     loc = str(tmp_path / "guard")
     t = LakeTable(spark, loc)
     s0 = t.commit([DataFile(path="data/a.parquet", rows=1, bytes=10)], SCHEMA, "create", None)
-    with pytest.raises(ValueError, match="delta"):
-        t.commit(None, SCHEMA, "append", s0.version)
-    # explicit truncate still works
-    s1 = t.commit([], SCHEMA, "overwrite", s0.version)
-    assert s1.n_files == 0
+    s1 = t.commit(None, SCHEMA, "append", s0.version)
+    assert [f.path for f in s1.files] == ["data/a.parquet"]
+    assert s1.manifests == s0.manifests
+    s2 = t.commit([], SCHEMA, "overwrite", s1.version)
+    assert s2.n_files == 0
+
+
+def test_delta_commit_naming_only_new_files_keeps_parent_files(spark, tmp_path):
+    loc = str(tmp_path / "delta")
+    t = LakeTable(spark, loc)
+    s0 = t.commit([DataFile(path="data/a.parquet", rows=1, bytes=10)], SCHEMA, "create", None)
+    s1 = t.commit(
+        None, SCHEMA, "append", s0.version,
+        new_files=[DataFile(path="data/b.parquet", rows=2, bytes=20)],
+    )
+    assert sorted(f.path for f in s1.files) == ["data/a.parquet", "data/b.parquet"]
+    assert s1.summary["added-data-files"] == 1
+    assert s1.summary["total-data-files"] == 2
+
+
+def test_metadata_only_commit_keeps_files_and_equality_delete(spark, tmp_path):
+    loc = str(tmp_path / "meta_only")
+    t = LakeTable(spark, loc)
+    s0 = t.commit(
+        [
+            DataFile(path="data/a.parquet", rows=1, bytes=10),
+            DataFile(path="data/b.parquet", rows=1, bytes=10),
+        ],
+        SCHEMA, "create", None,
+        delete_files=[DeleteFile(path="data/d.parquet", rows=1, bytes=10, equality_ids=["k1"])],
+    )
+    wider = T.StructType(SCHEMA.fields + [T.StructField("k3", T.StringType())])
+    s1 = t.commit(None, wider, "evolve-schema", s0.version)
+    assert sorted(f.path for f in s1.files) == ["data/a.parquet", "data/b.parquet"]
+    assert s1.delete_files == s0.delete_files
+    assert s1.summary["added-data-files"] == 0
+    assert s1.summary["total-delete-files"] == 1
 
 
 @pytest.mark.slow

@@ -133,6 +133,27 @@ def test_racing_branch_fork_loses(spark, tmp_path, catalog_server):
                   new_files=a2.stage_dataframe(spark.range(4, 5)))
 
 
+def test_branch_first_delta_commit_inherits_main(spark, tmp_path, catalog_server):
+    """A branch's first delta commit forks from main's head: naming only the
+    new files keeps main's files live on the branch, and a racing second
+    forker still loses the CAS(expected=None)."""
+    loc = str(tmp_path / "t")
+    t = LakeTable(spark, loc, pointer_store=_store(catalog_server, loc))
+    df = spark.range(3)
+    t.commit(t.stage_dataframe(df), df.schema, "create", None)
+
+    a1 = LakeTable(spark, loc, pointer_store=_store(catalog_server, loc), branch="dev")
+    a2 = LakeTable(spark, loc, pointer_store=_store(catalog_server, loc), branch="dev")
+    f2 = a2.stage_dataframe(spark.range(4, 5))
+    snap = a1.commit(None, df.schema, "append", 0,
+                     new_files=a1.stage_dataframe(spark.range(3, 4)))
+    assert snap.parent == 0
+    assert a1.read().count() == 4 and t.read().count() == 3
+    with pytest.raises(CommitConflictError):
+        a2.commit(None, df.schema, "append", 0, new_files=f2)
+    assert a1.read().count() == 4
+
+
 def test_bearer_token_auth(spark, tmp_path):
     """Auth wiring: a token-protected catalog rejects anonymous clients
     (401 → ConnectionError) and accepts the bearer token."""

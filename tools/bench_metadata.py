@@ -46,7 +46,6 @@ def main() -> None:
     t0 = time.perf_counter()
     s1 = table.commit(
         None, schema, "append", s0.version,
-        manifests=s0.manifests,
         new_files=[DataFile(path="data/new.parquet", rows=1, bytes=10, stats={"k": [0, 1]})],
     )
     delta = time.perf_counter() - t0
